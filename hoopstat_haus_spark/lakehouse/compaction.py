@@ -32,13 +32,12 @@ from __future__ import annotations
 import math
 import os
 import shutil
-import time
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from hoopstat_haus_spark.lakehouse import manifest as mf
 from hoopstat_haus_spark.lakehouse.zorder import with_zkey
 
 _ROUTE_REPS_CACHE: dict[int, list[int]] = {}
@@ -291,89 +290,6 @@ def plan_unit_bounds(
     return out
 
 
-_STATS_DDL = (
-    "pid int, file_name string, row_count long, token_count long, "
-    "min_doc_id string, max_doc_id string, min_n_tok int, max_n_tok int, "
-    "zmin long, zmax long, zq array<long>"
-)
-
-
-def _write_sorted_with_stats(
-    df, staging: str, codec: str | None, codec_level: int | None
-) -> list[dict]:
-    """Write each partition of ``df`` (already routed + zkey-sorted) to
-    ONE parquet file under ``staging`` AND compute that file's manifest
-    stats in the same pass — one Spark job where the old path ran two
-    (JVM parquet write, then a column-pruned RE-READ of every output
-    file for ``manifest.compute_file_stats``).
-
-    Each task streams its partition's Arrow batches into a pyarrow
-    ParquetWriter (same zstd codec/level as the JVM writer) while
-    folding row/token counts, doc_id/n_tok/zkey min-max and the zq
-    sample, and emits ONE stats row. The stats definition is
-    bit-identical to :func:`manifest.compute_file_stats` (same sample
-    predicate — computed JVM-side as a flag column — same ascending
-    sort, same grid truncation, same tiny-file full-keys fallback);
-    ``test_checkpointed_stats_match_recomputation`` pins the parity.
-
-    Task-retry safe without a commit protocol: file names carry a fresh
-    uuid per attempt and only files named in COLLECTED stats rows are
-    renamed out of staging; a failed attempt's partial file dies with
-    the staging dir."""
-    from hoopstat_haus_spark.lakehouse.manifest import ZQ_GRID, ZQ_SAMPLE_MOD
-
-    flag = F.pmod(F.xxhash64("doc_id", F.lit(13)), F.lit(ZQ_SAMPLE_MOD)) == 0
-    wide = df.withColumn("_zs_flag", flag)
-
-    def write_partition(batches):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        from hoopstat_haus_spark.lakehouse.manifest import FileStatsAcc
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        name = f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.parquet"
-        writer = None
-        acc = FileStatsAcc()
-        for batch in batches:
-            cols = batch.schema.names
-            zk = batch.column(cols.index("_zkey")).to_numpy(zero_copy_only=False)
-            fl = batch.column(cols.index("_zs_flag")).to_numpy(zero_copy_only=False).astype(bool)
-            data = batch.drop_columns(["_zs_flag"])
-            if writer is None:
-                writer = pq.ParquetWriter(
-                    os.path.join(staging, name),
-                    data.schema,
-                    compression=codec or "none",
-                    compression_level=codec_level,
-                )
-            writer.write_batch(data)
-            acc.add(batch, zk, fl)
-        if writer is None:  # empty route partition: no file, no stats row
-            return
-        writer.close()
-        stats = acc.finalize(clustered=True)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "pid": pa.array([pid], pa.int32()),
-                "file_name": pa.array([name], pa.string()),
-                "row_count": pa.array([stats["row_count"]], pa.int64()),
-                "token_count": pa.array([stats["token_count"]], pa.int64()),
-                "min_doc_id": pa.array([stats["min_doc_id"]], pa.string()),
-                "max_doc_id": pa.array([stats["max_doc_id"]], pa.string()),
-                "min_n_tok": pa.array([stats["min_n_tok"]], pa.int32()),
-                "max_n_tok": pa.array([stats["max_n_tok"]], pa.int32()),
-                "zmin": pa.array([stats["zmin"]], pa.int64()),
-                "zmax": pa.array([stats["zmax"]], pa.int64()),
-                "zq": pa.array([stats["zq"]], pa.list_(pa.int64())),
-            }
-        )
-
-    return [r.asDict() for r in wide.mapInArrow(write_partition, _STATS_DDL).collect()]
-
-
 def compact_partition(
     spark: SparkSession,
     table_path: str,
@@ -388,9 +304,12 @@ def compact_partition(
     bounds: list[int] | None = None,
 ) -> tuple[list[str], list[dict]]:
     """Rewrite one partition's victim files; returns (new relative
-    paths, their manifest stats entries). Stats are computed INSIDE the
-    rewrite job (:func:`_write_sorted_with_stats`) — no post-rewrite
-    stats scan ever re-reads the output.
+    paths, their manifest stats entries). The routed, ``_zkey``-sorted
+    frame gains the unit's value as a literal ``source`` column and goes
+    through :func:`manifest.write_partitioned_with_stats` as its
+    single-source case: each route partition becomes ONE file in sort
+    order, and its stats are computed INSIDE the rewrite job — no
+    post-rewrite stats scan ever re-reads the output.
 
     Staging-then-rename keeps the partition directory consistent: readers
     resolve files through the manifest, so in-flight staged files are
@@ -468,45 +387,15 @@ def compact_partition(
     if os.path.exists(staging):
         shutil.rmtree(staging)  # discard partial output from a crashed run
     os.makedirs(staging, exist_ok=True)
-    from hoopstat_haus_spark.lakehouse.manifest import parquet_codec_conf
-
-    codec, level = parquet_codec_conf(spark)
-    stats_rows = _write_sorted_with_stats(df, staging, codec, level)
-
-    from hoopstat_haus_spark.lakehouse.manifest import _escape_partition_value
-
-    part_dirname = f"source={_escape_partition_value(partition)}"
-    part_dir = os.path.join(data_dir, part_dirname)
-    os.makedirs(part_dir, exist_ok=True)
-    new_rel: list[str] = []
-    entries: list[dict] = []
-    zq_curve = curve  # stored _zkey + sketch were written with this run's curve
-    for seq, r in enumerate(sorted(stats_rows, key=lambda x: x["pid"])):
-        final = f"compact-{job_id}-{seq:05d}.parquet"
-        os.replace(os.path.join(staging, r["file_name"]), os.path.join(part_dir, final))
-        rel = f"data/{part_dirname}/{final}"
-        new_rel.append(rel)
-        entries.append(
-            {
-                "partition": partition,
-                "row_count": r["row_count"],
-                "token_count": r["token_count"],
-                "min_doc_id": r["min_doc_id"],
-                "max_doc_id": r["max_doc_id"],
-                "min_n_tok": r["min_n_tok"],
-                "max_n_tok": r["max_n_tok"],
-                "zmin": r["zmin"],
-                "zmax": r["zmax"],
-                "zq": [int(z) for z in r["zq"]] or None,
-                "file_path": rel,
-                "file_bytes": os.path.getsize(os.path.join(part_dir, final)),
-                "zq_curve": zq_curve,
-            }
-        )
-    # remove only THIS unit's staging dir — other units of the job may
+    codec, level = mf.parquet_codec_conf(spark)
+    rows = mf.write_partitioned_with_stats(
+        df.withColumn("source", F.lit(partition)), staging, codec, level
+    )
+    # removes only THIS unit's staging dir — other units of the job may
     # still be writing under .staging/<job_id>/ concurrently
-    shutil.rmtree(staging, ignore_errors=True)
-    return new_rel, entries
+    return mf.place_staged_files(
+        table_path, staging, rows, f"compact-{job_id}", curve, clustered=True
+    )
 
 
 def estimate_parquet_bytes(row_count: int, avg_tokens: float) -> int:

@@ -26,6 +26,7 @@ import json
 import os
 import time
 import uuid
+from contextlib import contextmanager
 
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 
@@ -68,6 +69,26 @@ def record_job_metrics(
     with open(path, "w") as f:
         json.dump(rec, f, indent=1)
     return path
+
+
+@contextmanager
+def failure_recorded(table_path: str, metrics: JobMetrics, operation: str):
+    """Run a maintenance op's body; if it raises, append a ``failed``
+    record for ``operation`` and re-raise. Crashed maintenance must reach
+    the health rollup: with only successes recorded, DEGRADED/OUTAGE are
+    unreachable and a stage crashing for days still reads OPERATIONAL.
+    The op's checkpoint is untouched, so it stays resumable."""
+    try:
+        yield
+    except Exception as exc:
+        metrics.finish()
+        try:
+            record_job_metrics(
+                table_path, metrics, operation, status="failed", error=repr(exc)[:500]
+            )
+        except OSError:
+            pass  # a full/read-only disk must not mask the root cause
+        raise
 
 
 def read_job_records(table_path: str) -> list[dict]:

@@ -34,6 +34,7 @@ shards the list says can matter.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
@@ -326,11 +327,22 @@ def write_partitioned_with_stats(
     fused form of ``partitionBy('source').parquet(...)`` followed by
     :func:`compute_file_stats`, which re-read every written file.
 
+    This is the ONE data-file writer: create/append/merge/DML/WAP write
+    through it via ``TokenLakeTable._write_files``, and compaction
+    (``compaction.compact_partition``) is its single-source caller — each
+    routed, ``_zkey``-sorted partition carries a literal ``source`` and
+    becomes one file whose row order is the input order.
+
     Each task splits its Arrow batches by ``source`` and streams them
     into one pyarrow ParquetWriter per source (same zstd codec/level as
-    the JVM writer; batches accumulate to row groups of up to
-    {_FLUSH_ROWS_PER_SOURCE} rows), folding the stats accumulators
-    batch-wise. Stats are bit-identical to :func:`compute_file_stats`:
+    the JVM writer; mixed-source slices buffer per source and flush as
+    one row group at {_FLUSH_ROWS_PER_SOURCE} rows), folding the stats accumulators
+    batch-wise. A batch holding a single source passes through whole —
+    no mask, no filtered copy — and is flushed as its own row group
+    (together with any slices of that source already buffered): Arrow
+    batches are already capped by rows AND bytes, so a single-source
+    stream, such as every compaction task, writes one row group per
+    batch. Stats are bit-identical to :func:`compute_file_stats`:
     same JVM-computed zq sample flag, ascending sort, grid truncation
     and tiny-file full-keys fallback; clustered inputs (``_zkey``
     column present) sketch the stored key and record real zmin/zmax,
@@ -339,10 +351,9 @@ def write_partitioned_with_stats(
 
     Returns one dict per written file: ``partition`` (raw value),
     ``dir`` (escaped ``source=...`` dir under staging), ``file_name``,
-    ``pid`` and the stat fields. The caller renames files out of
-    staging and attaches ``file_path``/``file_bytes``/``zq_curve``.
-    Task-retry safe: names carry a fresh uuid per attempt and only
-    files named in collected rows are renamed."""
+    ``pid`` and the stat fields; :func:`place_staged_files` renames them
+    into the table. Task-retry safe: names carry a fresh uuid per
+    attempt and only files named in collected rows are renamed."""
     import uuid as _uuid
 
     has_zkey = ZKEY_COL in df.columns
@@ -393,9 +404,15 @@ def write_partitioned_with_stats(
             zk = batch.column(cols.index(zsrc_col)).to_numpy(zero_copy_only=False)
             fl = batch.column(cols.index("_zs_flag")).to_numpy(zero_copy_only=False).astype(bool)
             drop = ["source", *helper_cols]
-            for val in pc.unique(batch.column(src_idx)).to_pylist():
-                mask = pc.equal(batch.column(src_idx), val)
-                sub = batch.filter(mask)
+            vals = pc.unique(batch.column(src_idx)).to_pylist()
+            for val in vals:
+                if len(vals) == 1:  # single source: no mask, no filter copy
+                    sub, sub_zk, sub_fl = batch, zk, fl
+                else:
+                    mask = pc.equal(batch.column(src_idx), val)
+                    sub = batch.filter(mask)
+                    m = mask.to_numpy(zero_copy_only=False).astype(bool)
+                    sub_zk, sub_fl = zk[m], fl[m]
                 st = state.get(val)
                 if st is None:
                     d = f"source={_escape_partition_value(val)}"
@@ -412,9 +429,8 @@ def write_partitioned_with_stats(
                 st["buf"].append(sub.drop_columns(drop))
                 st["buf_rows"] += sub.num_rows
                 total_buffered += sub.num_rows
-                m = mask.to_numpy(zero_copy_only=False).astype(bool)
-                st["acc"].add(sub, zk[m], fl[m])
-                if st["buf_rows"] >= _FLUSH_ROWS_PER_SOURCE:
+                st["acc"].add(sub, sub_zk, sub_fl)
+                if len(vals) == 1 or st["buf_rows"] >= _FLUSH_ROWS_PER_SOURCE:
                     flush(st)
             if total_buffered >= _FLUSH_ROWS_TOTAL:
                 for st in state.values():
@@ -462,6 +478,56 @@ def write_partitioned_with_stats(
             )
 
     return [r.asDict() for r in wide.mapInArrow(write_task, _PARTITIONED_STATS_DDL).collect()]
+
+
+def place_staged_files(
+    table_path: str,
+    staging: str,
+    rows: list[dict],
+    prefix: str,
+    curve: str,
+    clustered: bool,
+) -> tuple[list[str], list[dict]]:
+    """Rename :func:`write_partitioned_with_stats` output out of
+    ``staging`` into ``data/source=<v>/{prefix}-{seq:05d}.parquet``
+    (``seq`` counts per directory in (dir, pid, file_name) order), then
+    drop ``staging``. Returns (new table-relative paths, their manifest
+    entries). ``curve`` tags the zq sketch of ``clustered`` output
+    (stored ``_zkey``); unclustered output sketched the derived Morton
+    key, so it is tagged ``zorder``."""
+    zq_curve = curve if clustered else "zorder"
+    new_rel: list[str] = []
+    entries: list[dict] = []
+    seq: dict[str, int] = {}
+    for r in sorted(rows, key=lambda x: (x["dir"], x["pid"], x["file_name"])):
+        d = r["dir"]
+        s = seq.get(d, 0)
+        seq[d] = s + 1
+        part_dir = os.path.join(table_path, "data", d)
+        os.makedirs(part_dir, exist_ok=True)
+        final = f"{prefix}-{s:05d}.parquet"
+        os.replace(os.path.join(staging, d, r["file_name"]), os.path.join(part_dir, final))
+        rel = f"data/{d}/{final}"
+        new_rel.append(rel)
+        entries.append(
+            {
+                "partition": r["partition"],
+                "row_count": r["row_count"],
+                "token_count": r["token_count"],
+                "min_doc_id": r["min_doc_id"],
+                "max_doc_id": r["max_doc_id"],
+                "min_n_tok": r["min_n_tok"],
+                "max_n_tok": r["max_n_tok"],
+                "zmin": r["zmin"],
+                "zmax": r["zmax"],
+                "zq": [int(z) for z in r["zq"]] or None,
+                "file_path": rel,
+                "file_bytes": os.path.getsize(os.path.join(part_dir, final)),
+                "zq_curve": zq_curve,
+            }
+        )
+    shutil.rmtree(staging, ignore_errors=True)
+    return new_rel, entries
 
 
 _MANIFEST_FIELDS = [

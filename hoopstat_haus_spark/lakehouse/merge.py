@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
 from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
+from hoopstat_haus_spark.lakehouse.health import failure_recorded
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
@@ -108,19 +109,8 @@ def merge_into(
         )
     job_id = job_id or f"merge-{uuid.uuid4().hex[:10]}"
     metrics = JobMetrics(job=job_id)
-    try:
+    with failure_recorded(table.path, metrics, "merge"):
         return _merge_run(table, updates, job_id, curve, metrics, summary_extra)
-    except Exception as exc:
-        # failed merges must reach the health rollup (DEGRADED/OUTAGE are
-        # unreachable if only successes ever record)
-        from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-        metrics.finish()
-        try:
-            record_job_metrics(table.path, metrics, "merge", status="failed", error=repr(exc)[:500])
-        except OSError:
-            pass  # a full/read-only disk must not mask the root cause
-        raise
 
 
 def _merge_run(

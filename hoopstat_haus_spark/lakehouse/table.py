@@ -34,7 +34,6 @@ and Spark unions the scans (filters/pruning push into every branch).
 from __future__ import annotations
 
 import os
-import shutil
 import time
 import uuid
 
@@ -50,6 +49,7 @@ from hoopstat_haus_spark.lakehouse.compaction import (
     plan_compaction,
     plan_unit_bounds,
 )
+from hoopstat_haus_spark.lakehouse.health import failure_recorded
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.schema import TableSchema, evolved, read_schema, write_schema
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot, SnapshotLog
@@ -132,40 +132,10 @@ class TokenLakeTable:
         out = out.select(*[c for c in out.columns if c in keep])
         os.makedirs(staging, exist_ok=True)
         codec, level = mf.parquet_codec_conf(self.spark)
-        zq_curve = curve if mf.ZKEY_COL in out.columns else "zorder"
         rows = mf.write_partitioned_with_stats(out, staging, codec, level)
-        new_rel: list[str] = []
-        entries: list[dict] = []
-        seq: dict[str, int] = {}
-        for r in sorted(rows, key=lambda x: (x["dir"], x["pid"], x["file_name"])):
-            d = r["dir"]
-            s = seq.get(d, 0)
-            seq[d] = s + 1
-            part_dir = os.path.join(self.data_dir, d)
-            os.makedirs(part_dir, exist_ok=True)
-            final = f"{job}-{s:05d}.parquet"
-            os.replace(os.path.join(staging, d, r["file_name"]), os.path.join(part_dir, final))
-            rel = f"data/{d}/{final}"
-            new_rel.append(rel)
-            entries.append(
-                {
-                    "partition": r["partition"],
-                    "row_count": r["row_count"],
-                    "token_count": r["token_count"],
-                    "min_doc_id": r["min_doc_id"],
-                    "max_doc_id": r["max_doc_id"],
-                    "min_n_tok": r["min_n_tok"],
-                    "max_n_tok": r["max_n_tok"],
-                    "zmin": r["zmin"],
-                    "zmax": r["zmax"],
-                    "zq": [int(z) for z in r["zq"]] or None,
-                    "file_path": rel,
-                    "file_bytes": os.path.getsize(os.path.join(part_dir, final)),
-                    "zq_curve": zq_curve,
-                }
-            )
-        shutil.rmtree(staging, ignore_errors=True)
-        return new_rel, entries
+        return mf.place_staged_files(
+            self.path, staging, rows, job, curve, clustered=mf.ZKEY_COL in out.columns
+        )
 
     @classmethod
     def create(
@@ -431,27 +401,11 @@ class TokenLakeTable:
         policy = policy or CompactionPolicy()
         job_id = job_id or f"compact-{uuid.uuid4().hex[:10]}"
         metrics = JobMetrics(job=job_id)
-        try:
+        with failure_recorded(self.path, metrics, "compact"):
             return self._compact_run(
                 policy, curve, strategy, job_id, max_concurrent_units, metrics, sources,
                 curve_by_source,
             )
-        except Exception as exc:
-            # crashed maintenance must surface in the health rollup:
-            # without a 'failed' record, DEGRADED/OUTAGE are unreachable
-            # and a stage crashing for days still reads OPERATIONAL from
-            # its last old success. The job stays resumable (checkpoint
-            # intact); only the metrics record marks the failure.
-            from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-            metrics.finish()
-            try:
-                record_job_metrics(
-                    self.path, metrics, "compact", status="failed", error=repr(exc)[:500]
-                )
-            except OSError:
-                pass  # a full/read-only disk must not mask the root cause
-            raise
 
     def _compact_run(
         self,
@@ -538,7 +492,7 @@ class TokenLakeTable:
             t0 = time.time()
             ckpt.intent(part, in_paths)
             # stats come back from the SAME job that writes the files
-            # (compaction._write_sorted_with_stats): one job per unit
+            # (manifest.write_partitioned_with_stats): one job per unit
             # instead of write + a column-pruned re-read of the output —
             # fewer stage boundaries (the serial tail costs 4x in N->4N
             # scaling) and ~GB-scale less read I/O per cycle

@@ -1,14 +1,14 @@
 """Structured JSON observability: performance logging + correlation ids.
 
 Reference surface: ``libs/hoopstat-observability/hoopstat_observability``
-(``performance.py`` — a decorator/context pair that JSON-logs one record
-per operation with duration, records processed, throughput, and status;
-``correlation.py`` — a thread-local correlation id attached to every
-record; ``json_logger.py`` — single-line JSON to a stdlib logger). The
-reference uses these around Lambda handlers; here they wrap driver-side
-engine entry points (spark-submit jobs, maintenance cycles) — per-ROW
-work stays in executors and is measured by `lakehouse/metrics.py`, not
-by Python decorators.
+(``performance.py`` — JSON-logs one record per operation with duration,
+records processed, throughput, and status; ``correlation.py`` — a
+thread-local correlation id attached to every record;
+``json_logger.py`` — single-line JSON to a stdlib logger). The
+reference uses these around Lambda handlers; here the
+:func:`performance_context` manager wraps driver-side engine entry
+points (spark-submit jobs, maintenance cycles) — per-ROW work stays in
+executors and is measured by `lakehouse/metrics.py`.
 
 Record shape (mirrors ``apps/gold-analytics/app/performance.py:175-199``):
 
@@ -18,13 +18,11 @@ Record shape (mirrors ``apps/gold-analytics/app/performance.py:175-199``):
 
 from __future__ import annotations
 
-import functools
 import json
 import logging
 import threading
 import time
 import uuid
-from collections.abc import Callable
 from contextlib import contextmanager
 from typing import Any
 
@@ -90,56 +88,11 @@ def _emit(
     return rec
 
 
-def _extract_records(result: Any) -> int | None:
-    """Best-effort record count from a return value: ints count
-    themselves; JobMetrics-like objects expose .rows; dicts may carry
-    'rows' or 'records_processed'."""
-    if isinstance(result, bool) or result is None:
-        return None
-    if isinstance(result, int):
-        return result
-    rows = getattr(result, "rows", None)
-    if isinstance(rows, int):
-        return rows
-    if isinstance(result, dict):
-        for key in ("rows", "records_processed"):
-            if isinstance(result.get(key), int):
-                return result[key]
-    if isinstance(result, tuple):
-        for item in result:
-            n = _extract_records(item)
-            if n is not None:
-                return n
-    return None
-
-
-def performance_monitor(operation: str | None = None) -> Callable:
-    """Decorator: JSON-log one performance record per call — duration,
-    best-effort record count, throughput, success/failure (the failure
-    record logs the exception and re-raises)."""
-
-    def decorator(func: Callable) -> Callable:
-        op = operation or func.__name__
-
-        @functools.wraps(func)
-        def wrapper(*args, **kwargs):
-            t0 = time.time()
-            try:
-                result = func(*args, **kwargs)
-            except Exception as exc:
-                _emit(op, time.time() - t0, None, "failed", error=repr(exc)[:500])
-                raise
-            _emit(op, time.time() - t0, _extract_records(result), "success")
-            return result
-
-        return wrapper
-
-    return decorator
-
-
 @contextmanager
 def performance_context(operation: str, records: int | None = None):
-    """Context-manager form; set ``ctx.records`` inside the block to
+    """JSON-log one performance record for the block — duration, record
+    count, throughput, success/failure (the failure record logs the
+    exception and re-raises). Set ``ctx.records`` inside the block to
     report a count discovered mid-operation."""
 
     class _Ctx:

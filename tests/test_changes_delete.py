@@ -11,6 +11,8 @@ the FROM state must reproduce the TO state exactly, and pure physical
 rewrites (compaction) must emit zero rows.
 """
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -264,7 +266,18 @@ def test_dml_on_partition_value_spark_escapes(spark, tmp_path):
     gone = {d for d in pre if int(d[4:]) % 6 == 0}
     snap, _ = t.delete_where(f"{NUM} % 6 = 0")
     assert snap is not None and snap.summary["matched_rows"] == len(gone)
-    assert set(sig_map(t.scan())) == set(pre) - gone
+    post = sig_map(t.scan())
+    assert set(post) == set(pre) - gone
+    # compaction writes through the same escaping fused writer;
+    # min_input_files=1 rewrites each partition's single delete output
+    snap, _ = t.compact(dataclasses.replace(POLICY, min_input_files=1), job_id="esc")
+    assert snap is not None
+    assert sig_map(t.scan()) == post
+    compacted = {e["file_path"] for e in t.manifest_entries()}
+    assert compacted == {
+        f"data/source=a%25x%3A{s[4:]}/compact-esc-00000.parquet"
+        for s in {v[2] for v in post.values()}
+    }
 
 
 def test_changes_classify_join_shuffles_no_payload(spark, tmp_path):

@@ -1,6 +1,10 @@
 """Pipeline-health aggregation — reference health-aggregator semantics
 (operational / degraded / outage, most-recent-run rules)."""
 
+import dataclasses
+
+import pytest
+from pyspark.errors import ParseException
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import CompactionPolicy, TokenLakeTable
@@ -61,12 +65,39 @@ def test_empty_table_reports_outage(tmp_path):
     assert report["jobs_seen"] == 0
 
 
-def test_crashed_merge_records_failed_and_degrades(spark, tmp_table_dir):
-    """A merge that raises mid-flight must leave a status='failed' record
-    (advisor finding: without it, DEGRADED/OUTAGE were unreachable from
-    engine-run jobs)."""
-    import pytest
+def _fail_compact(t, ok):
+    # min_input_files=1 plans the already-compacted single-file partitions
+    t.compact(dataclasses.replace(POLICY, min_input_files=1), strategy="bogus")
 
+
+def _fail_merge(t, ok):
+    merge_into(t, ok.limit(1).unionByName(ok.limit(1)))  # duplicate keys → reject
+
+
+@pytest.mark.parametrize(
+    "op, fail, exc, match, status",
+    [
+        ("compact", _fail_compact, ValueError, "unknown strategy", DEGRADED),
+        ("merge", _fail_merge, ValueError, "duplicate", DEGRADED),
+        ("delete", lambda t, ok: t.delete_where("doc_id ==="), ParseException, "", OUTAGE),
+        (
+            "update",
+            lambda t, ok: t.update_where("true", {"doc_id": "'x'"}),
+            ValueError,
+            "doc_id",
+            OUTAGE,
+        ),
+    ],
+    ids=["compact", "merge", "delete", "update"],
+)
+def test_crashed_op_records_failed_and_degrades(
+    spark, tmp_table_dir, op, fail, exc, match, status
+):
+    """A maintenance op that raises mid-flight must leave a
+    status='failed' record (advisor finding: without it, DEGRADED/OUTAGE
+    were unreachable from engine-run jobs). compact and merge succeed
+    once first, so their failure reads DEGRADED; delete/update never
+    succeeded, so theirs reads OUTAGE."""
     t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 2000), repartition_n=2)
     t.compact(POLICY)
     ok = (
@@ -74,14 +105,14 @@ def test_crashed_merge_records_failed_and_degrades(spark, tmp_table_dir):
         .select("doc_id", F.expr("transform(tokens, x -> cast(x + 1 as int))").alias("tokens"),
                 "n_tok", "source")
     )
-    merge_into(t, ok)  # one success so the failure reads as DEGRADED
-    dup = ok.limit(1).unionByName(ok.limit(1))  # duplicate keys → reject
-    with pytest.raises(ValueError, match="duplicate"):
-        merge_into(t, dup)
-    recs = [r for r in read_job_records(t.path) if r["operation"] == "merge"]
+    merge_into(t, ok)
+    with pytest.raises(exc, match=match):
+        fail(t, ok)
+    recs = [r for r in read_job_records(t.path) if r["operation"] == op]
     assert recs[-1]["status"] == "failed"
-    assert "duplicate" in (recs[-1].get("error") or "")
-    assert health_report(t.path)["stages"]["merge"]["status"] == DEGRADED
+    assert match in (recs[-1].get("error") or "")
+    assert recs[-1]["error"]
+    assert health_report(t.path)["stages"][op]["status"] == status
 
 
 def test_stale_success_degrades_with_freshness_rule(spark, tmp_table_dir):

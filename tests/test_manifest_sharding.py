@@ -312,10 +312,10 @@ def test_partition_dir_escaping_matches_spark():
 
 
 def test_fused_write_stats_multibatch_parity(spark, tmp_table_dir):
-    """The fused writers fold stats across MANY Arrow batches per file
+    """The fused writer folds stats across MANY Arrow batches per file
     when rows exceed arrow.maxRecordsPerBatch; pin parity under a tiny
     batch size (forces multi-batch accumulation, per-source buffering
-    and multi-row-group files on both write paths)."""
+    on create and multi-row-group files on compaction)."""
     from hoopstat_haus_spark.lakehouse import manifest as mf
     from hoopstat_haus_spark.lakehouse.compaction import CompactionPolicy
 
@@ -336,3 +336,18 @@ def test_fused_write_stats_multibatch_parity(spark, tmp_table_dir):
     assert len(fresh) == len(entries)
     for e in fresh:
         assert entries[e["file_path"]] == e
+
+    # one task sees single-source AND mixed-source batches (source
+    # boundaries inside 500-row batches): both writer branches feed the
+    # same files' stats
+    spark.conf.set(key, "500")
+    try:
+        more = synthetic(spark, 11000).filter("doc_id >= 'doc-0000008000'")
+        t.append(more.repartition(1).sortWithinPartitions("source"))
+    finally:
+        spark.conf.set(key, prev)
+    added = {e["file_path"]: e for e in t.manifest_entries() if e["file_path"] not in entries}
+    fresh = mf.compute_file_stats(spark, t.path, sorted(added))
+    assert len(fresh) == len(added) > 1
+    for e in fresh:
+        assert added[e["file_path"]] == e

@@ -18,7 +18,6 @@ from hoopstat_haus_spark.observability import (
     correlation_scope,
     get_correlation_id,
     performance_context,
-    performance_monitor,
     set_correlation_id,
 )
 
@@ -35,59 +34,16 @@ def records(caplog):
     clear_correlation_id()
 
 
-def test_decorator_success_record(records):
-    @performance_monitor("unit_op")
-    def work(n):
-        return n * 2
-
-    assert work(21) == 42
-    recs = records()
-    assert len(recs) == 1
-    r = recs[0]
-    assert r["operation"] == "unit_op"
-    assert r["status"] == "success"
-    assert r["records_processed"] == 42
-    assert r["duration_seconds"] >= 0
-    assert "records_per_second" in r
-
-
-def test_decorator_failure_reraises_and_logs(records):
-    @performance_monitor()
-    def boom():
-        raise ValueError("kapow")
-
-    with pytest.raises(ValueError, match="kapow"):
-        boom()
-    r = records()[0]
-    assert r["operation"] == "boom"
-    assert r["status"] == "failed"
-    assert "kapow" in r["error"]
-    assert r["records_processed"] is None
-
-
-def test_record_extraction_from_metrics_tuple(records):
-    """(snapshot, JobMetrics) return shapes report JobMetrics.rows."""
-    from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
-
-    m = JobMetrics(job="j")
-    m.rows = 1234
-
-    @performance_monitor("compact")
-    def run():
-        return (object(), m)
-
-    run()
-    assert records()[0]["records_processed"] == 1234
-
-
 def test_correlation_scope_attaches_and_nests(records):
     with correlation_scope("outer-id"):
         assert get_correlation_id() == "outer-id"
         with correlation_scope() as inner:
             assert inner != "outer-id"
-            performance_monitor("inner_op")(lambda: 1)()
+            with performance_context("inner_op"):
+                pass
         assert get_correlation_id() == "outer-id"
-        performance_monitor("outer_op")(lambda: 2)()
+        with performance_context("outer_op"):
+            pass
     assert get_correlation_id() is None
 
     recs = {r["operation"]: r for r in records()}
@@ -96,7 +52,8 @@ def test_correlation_scope_attaches_and_nests(records):
 
 
 def test_no_correlation_id_outside_scope(records):
-    performance_monitor("bare")(lambda: None)()
+    with performance_context("bare"):
+        pass
     assert "correlation_id" not in records()[0]
 
 
@@ -111,10 +68,12 @@ def test_performance_context_records_and_failure(records):
     assert recs["ctx_op"]["status"] == "success"
     assert recs["ctx_op"]["records_processed"] == 7
     assert recs["ctx_fail"]["status"] == "failed"
+    assert "nope" in recs["ctx_fail"]["error"]
 
 
 def test_set_correlation_id_explicit(records):
     set_correlation_id("fixed")
-    performance_monitor("op")(lambda: 0)()
+    with performance_context("op"):
+        pass
     clear_correlation_id()
     assert records()[0]["correlation_id"] == "fixed"
