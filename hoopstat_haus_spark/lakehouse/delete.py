@@ -6,7 +6,8 @@ write-back ``:425-458``) — generalized here from key-addressed patches to
 arbitrary-predicate row DML with Iceberg semantics: ``DELETE FROM``
 removes rows where the predicate is TRUE (NULL/FALSE rows survive);
 ``UPDATE SET`` rewrites matching rows in place (see update.py, which
-shares this module's find/commit halves).
+shares this module's find pass and rewrite pass; the commit is
+``table.commit_rewrite``, the one commit every write goes through).
 
 Scale design (two passes, both bounded by the predicate):
 
@@ -30,17 +31,17 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
+from typing import Callable
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
 from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
-from hoopstat_haus_spark.lakehouse.health import failure_recorded
+from hoopstat_haus_spark.lakehouse.health import run_recorded
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite
 from hoopstat_haus_spark.lakehouse.zorder import with_zkey
 
 
@@ -59,10 +60,12 @@ def delete_where(
     never opened). ``curve`` names the space-filling curve rewritten
     survivors are re-keyed with (same contract as ``merge_into``).
     """
-    job_id = job_id or f"delete-{uuid.uuid4().hex[:10]}"
-    metrics = JobMetrics(job=job_id)
-    with failure_recorded(table.path, metrics, "delete"):
-        return _delete_run(table, condition, job_id, sources, curve, metrics)
+    return run_recorded(
+        table.path,
+        "delete",
+        job_id,
+        lambda job_id, metrics: _delete_run(table, condition, job_id, sources, curve, metrics),
+    )
 
 
 def find_touched_files(
@@ -132,76 +135,34 @@ def find_touched_files(
     return head, matched_rows, cand, shard_entries
 
 
-def read_touched(table: TokenLakeTable, schema, cand_paths: list[str]):
-    """Full-row read of exactly the touched files, defaults applied."""
-    df = (
+def rewrite_touched(
+    table: TokenLakeTable,
+    schema,
+    cand: list[dict],
+    transform: Callable[[DataFrame], DataFrame],
+    prefix: str,
+    job_id: str,
+    curve: str,
+    metrics: JobMetrics,
+) -> list[dict]:
+    """Pass 2 (shared by DELETE/UPDATE): read exactly the touched files
+    (full rows, defaults applied), apply the op's row ``transform``,
+    re-cluster, write back under the job's checkpoint. Returns the
+    fresh files' manifest entries."""
+    cand_paths = [e["file_path"] for e in cand]
+    ckpt = JobCheckpoint(table.path, job_id)
+    ckpt.intent("rewrite", cand_paths)
+    t0 = time.time()
+    target = (
         table.spark.read.option("basePath", table.data_dir)
         .schema(schema.ddl(extra=((mf.ZKEY_COL, "long"),)))
         .parquet(*[os.path.join(table.path, p) for p in cand_paths])
         .drop(mf.ZKEY_COL)
     )
-    return schema.apply_defaults(df)
-
-
-def commit_rewrite(
-    table: TokenLakeTable,
-    head: Snapshot,
-    schema,
-    cand: list[dict],
-    shard_entries: dict[str, list[dict]],
-    fresh: list[dict],
-    operation: str,
-    summary: dict,
-) -> Snapshot:
-    """Shared commit half: drop the rewritten files, add the fresh ones,
-    write new shards ONLY for touched partitions (others carried by
-    reference), commit with optimistic concurrency."""
-    dropped = {e["file_path"] for e in cand}
-    fresh_by_part: dict[str, list[dict]] = {}
-    for e in fresh:
-        fresh_by_part.setdefault(e["partition"], []).append(e)
-    changed_parts = {e["partition"] for e in cand} | set(fresh_by_part)
-    changed = {
-        part: [e for e in shard_entries.get(part, []) if e["file_path"] not in dropped]
-        + fresh_by_part.get(part, [])
-        for part in changed_parts
-    }
-    rel, new_records = mf.update_manifest(table.path, head.manifest, changed)
-    # full post-state aggregates (files/rows/tokens/bytes/partitions),
-    # like every other commit kind — history() and trend tooling read
-    # them; the caller's op-specific keys layer on top
-    summary = {**mf.summary_from_records(new_records), **summary}
-    summary["schema_version"] = schema.version
-    return table.log.commit(rel, operation, summary, expected_parent=head.snapshot_id)
-
-
-def _delete_run(
-    table: TokenLakeTable,
-    condition: Column | str,
-    job_id: str,
-    sources: list[str] | None,
-    curve: str,
-    metrics: JobMetrics,
-) -> tuple[Snapshot | None, JobMetrics]:
-    spark = table.spark
-    pred = F.expr(condition) if isinstance(condition, str) else condition
-    schema = table.schema_def()
-
-    # ---- pass 1: find touched files (column-pruned, predicate pushed) --
-    head, matched_rows, cand, shard_entries = find_touched_files(table, pred, sources, metrics)
-    if not cand:
-        return None, metrics.finish()
-    cand_paths = [e["file_path"] for e in cand]
-
-    # ---- pass 2: rewrite only touched files ---------------------------
-    ckpt = JobCheckpoint(table.path, job_id)
-    ckpt.intent("rewrite", cand_paths)
-    t0 = time.time()
-    target = read_touched(table, schema, cand_paths)
-    survivors = target.filter(~F.coalesce(pred, F.lit(False)))
-    survivors = with_zkey(survivors, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)
+    out = transform(schema.apply_defaults(target))
+    out = with_zkey(out, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)
     new_files, fresh = table._write_files(
-        survivors, f"delete-{job_id}", repartition_n=None, curve=curve
+        out, f"{prefix}-{job_id}", repartition_n=None, curve=curve
     )
     metrics.files_out = len(fresh)
     metrics.bytes_out = sum(e["file_bytes"] for e in fresh)
@@ -213,9 +174,39 @@ def _delete_run(
         tokens=metrics.tokens,
         duration_s=time.time() - t0,
     )
+    return fresh
+
+
+def _delete_run(
+    table: TokenLakeTable,
+    condition: Column | str,
+    job_id: str,
+    sources: list[str] | None,
+    curve: str,
+    metrics: JobMetrics,
+) -> Snapshot | None:
+    pred = F.expr(condition) if isinstance(condition, str) else condition
+    schema = table.schema_def()
+
+    # ---- pass 1: find touched files (column-pruned, predicate pushed) --
+    head, matched_rows, cand, shard_entries = find_touched_files(table, pred, sources, metrics)
+    if not cand:
+        return None
+
+    # ---- pass 2: rewrite only touched files, keeping the survivors ----
+    fresh = rewrite_touched(
+        table,
+        schema,
+        cand,
+        lambda target: target.filter(~F.coalesce(pred, F.lit(False))),
+        "delete",
+        job_id,
+        curve,
+        metrics,
+    )
 
     # ---- commit: new shards only for touched partitions ---------------
-    snap = commit_rewrite(
+    return commit_rewrite(
         table,
         head,
         schema,
@@ -226,12 +217,7 @@ def _delete_run(
         {
             "job_id": job_id,
             "matched_rows": matched_rows,
-            "rewritten_files": len(cand_paths),
+            "rewritten_files": len(cand),
             "new_files": len(fresh),
         },
     )
-    metrics.finish()
-    from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-    record_job_metrics(table.path, metrics, "delete", snapshot_id=snap.snapshot_id)
-    return snap, metrics

@@ -5,9 +5,10 @@ daily summaries rolled into a validated health report with
 OPERATIONAL / DEGRADED / OUTAGE statuses (most-recent-run semantics,
 worst-stage-wins overall, ``_derive_stage_statuses`` at :190-257).
 
-Engine version: every maintenance job (compact / merge) appends a JSON
-metrics record to ``_metrics/`` at commit time; :func:`health_report`
-rolls the records up per operation with the reference's status rules:
+Engine version: every maintenance job (compact / merge / delete /
+update) appends a JSON metrics record to ``_metrics/`` at commit time
+(:func:`run_recorded`); :func:`health_report` rolls the records up
+per operation with the reference's status rules:
 
 - OPERATIONAL — the most recent run of the operation succeeded
 - DEGRADED   — the most recent run failed, but some run in the lookback
@@ -26,9 +27,10 @@ import json
 import os
 import time
 import uuid
-from contextlib import contextmanager
+from typing import Callable
 
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
+from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 
 OPERATIONAL = "operational"
 DEGRADED = "degraded"
@@ -71,15 +73,31 @@ def record_job_metrics(
     return path
 
 
-@contextmanager
-def failure_recorded(table_path: str, metrics: JobMetrics, operation: str):
-    """Run a maintenance op's body; if it raises, append a ``failed``
-    record for ``operation`` and re-raise. Crashed maintenance must reach
-    the health rollup: with only successes recorded, DEGRADED/OUTAGE are
-    unreachable and a stage crashing for days still reads OPERATIONAL.
-    The op's checkpoint is untouched, so it stays resumable."""
+def run_recorded(
+    table_path: str,
+    operation: str,
+    job_id: str | None,
+    body: Callable[[str, JobMetrics], Snapshot | None],
+) -> tuple[Snapshot | None, JobMetrics]:
+    """The one maintenance-op lifecycle (compact / merge / delete /
+    update): default the job id, run ``body(job_id, metrics)``, then
+    append a ``success`` record stamped with the committed snapshot, or
+    nothing when the body committed nothing (returned None).
+
+    If the body — or the success record's own write — raises, a
+    ``failed`` record goes in instead and the exception re-raises.
+    Crashed maintenance must reach the health rollup: with only
+    successes recorded, DEGRADED/OUTAGE are unreachable and a stage
+    crashing for days still reads OPERATIONAL. The op's checkpoint is
+    untouched, so it stays resumable."""
+    job_id = job_id or f"{operation}-{uuid.uuid4().hex[:10]}"
+    metrics = JobMetrics(job=job_id)
     try:
-        yield
+        snap = body(job_id, metrics)
+        metrics.finish()
+        if snap is not None:
+            record_job_metrics(table_path, metrics, operation, snapshot_id=snap.snapshot_id)
+        return snap, metrics
     except Exception as exc:
         metrics.finish()
         try:

@@ -719,16 +719,6 @@ def summary_from_records(records: list[dict]) -> dict:
     }
 
 
-def write_manifest(table_path: str, entries: list[dict]) -> str:
-    """Full manifest write (create / whole-table rewrite): shard every
-    partition + write the list; returns the LIST's table-relative path."""
-    by_part: dict[str, list[dict]] = {}
-    for e in entries:
-        by_part.setdefault(e["partition"], []).append(e)
-    rel, _records = update_manifest(table_path, None, by_part)
-    return rel
-
-
 def manifest_files(table_path: str, rel_path: str) -> list[str]:
     """Every metadata file a manifest rel reaches (itself + its shards)
     — the GC reachability set for manifests."""

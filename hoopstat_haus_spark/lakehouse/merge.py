@@ -23,17 +23,16 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
 from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
-from hoopstat_haus_spark.lakehouse.health import failure_recorded
+from hoopstat_haus_spark.lakehouse.health import run_recorded
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite
 from hoopstat_haus_spark.lakehouse.zorder import with_zkey
 
 OP_COL = "_op"  # optional in updates: 'upsert' (default) | 'delete'
@@ -107,10 +106,12 @@ def merge_into(
         raise ValueError(
             f"summary_extra keys would clobber commit aggregates: {sorted(clash)}"
         )
-    job_id = job_id or f"merge-{uuid.uuid4().hex[:10]}"
-    metrics = JobMetrics(job=job_id)
-    with failure_recorded(table.path, metrics, "merge"):
-        return _merge_run(table, updates, job_id, curve, metrics, summary_extra)
+    return run_recorded(
+        table.path,
+        "merge",
+        job_id,
+        lambda job_id, metrics: _merge_run(table, updates, job_id, curve, metrics, summary_extra),
+    )
 
 
 def _merge_run(
@@ -120,7 +121,7 @@ def _merge_run(
     curve: str,
     metrics: JobMetrics,
     summary_extra: dict | None = None,
-) -> tuple[Snapshot, JobMetrics]:
+) -> Snapshot:
     spark = table.spark
     ckpt = JobCheckpoint(table.path, job_id)
     head = table.log.current()
@@ -301,36 +302,21 @@ def _merge_apply(
         duration_s=time.time() - t0,
     )
     # new shards only for partitions that actually changed (a rewritten
-    # file or a fresh output); everything else rides by reference
-    dropped = set(cand_paths)
-    fresh_by_part: dict[str, list[dict]] = {}
-    for e in fresh:
-        fresh_by_part.setdefault(e["partition"], []).append(e)
-    changed_parts = {e["partition"] for e in cand} | set(fresh_by_part)
-    changed = {
-        part: [e for e in shard_entries.get(part, []) if e["file_path"] not in dropped]
-        + fresh_by_part.get(part, [])
-        for part in changed_parts
-    }
-    rel, new_records = mf.update_manifest(table.path, head.manifest, changed)
-    snap = table.log.commit(
-        rel,
+    # file or a fresh output); everything else rides by reference.
+    # commit_rewrite stamps the full table aggregates on top of these
+    # keys (summary_extra overlap rejected at entry)
+    return commit_rewrite(
+        table,
+        head,
+        schema,
+        cand,
+        shard_entries,
+        fresh,
         "merge",
         {
-            # full table aggregates, same as append/compact/DML commits —
-            # history() and other metadata readers must not see files=0
-            # on merge snapshots (summary_extra overlap rejected at entry)
-            **mf.summary_from_records(new_records),
             "job_id": job_id,
             "rewritten_files": len(cand_paths),
             "new_files": len(fresh),
-            "schema_version": schema.version,
             **(summary_extra or {}),
         },
-        expected_parent=head.snapshot_id,
     )
-    metrics.finish()
-    from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-    record_job_metrics(table.path, metrics, "merge", snapshot_id=snap.snapshot_id)
-    return snap, metrics

@@ -49,7 +49,7 @@ from hoopstat_haus_spark.lakehouse.compaction import (
     plan_compaction,
     plan_unit_bounds,
 )
-from hoopstat_haus_spark.lakehouse.health import failure_recorded
+from hoopstat_haus_spark.lakehouse.health import run_recorded
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.schema import TableSchema, evolved, read_schema, write_schema
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot, SnapshotLog
@@ -152,35 +152,33 @@ class TokenLakeTable:
         if t.log.current_id() is not None:
             raise ValueError(f"table already exists at {path}")
         os.makedirs(t.data_dir, exist_ok=True)
-        _new_files, entries = t._write_files(df, "append", repartition_n)
-        rel = mf.write_manifest(t.path, entries)
-        t.log.commit(rel, "append", t._stamp(_summary(entries)))
+        schema = t.schema_def()
+        _new_files, fresh = t._write_files(df, "append", repartition_n)
+        t._commit_append(None, schema, fresh, {})
         return t
-
-    def _stamp(self, summary: dict) -> dict:
-        return {**summary, "schema_version": self.schema_def().version}
 
     def append(self, df: DataFrame, repartition_n: int | None = None) -> Snapshot:
         """Append a batch. Manifest cost is O(touched partitions): only
         the partitions the batch lands in get a new shard; the rest of
         the table is carried by reference in the new manifest list."""
         head = self.log.current()
-        _new_files, fresh = self._write_files(self.schema_def().conform(df), "append", repartition_n)
-        by_part: dict[str, list[dict]] = {}
-        for e in fresh:
-            by_part.setdefault(e["partition"], []).append(e)
-        base = {r["partition"]: r for r in mf.read_manifest_list(self.path, head.manifest)}
-        changed = {
-            part: (mf.read_shard(self.path, base[part]) if part in base else []) + entries
-            for part, entries in by_part.items()
+        schema = self.schema_def()
+        _new_files, fresh = self._write_files(schema.conform(df), "append", repartition_n)
+        return self._commit_append(head, schema, fresh, {})
+
+    def _commit_append(
+        self, head: Snapshot | None, schema: TableSchema, fresh: list[dict], summary: dict
+    ) -> Snapshot:
+        """Append commit shared by create, append and WAP publish: the
+        landing partitions' current entries are read from ``head`` (none
+        when ``head`` is None, a create) and ``fresh`` is added to them;
+        every other shard is carried by reference."""
+        landing = {e["partition"] for e in fresh}
+        records = mf.read_manifest_list(self.path, head.manifest) if head else []
+        shard_entries = {
+            r["partition"]: mf.read_shard(self.path, r) for r in records if r["partition"] in landing
         }
-        rel, records = mf.update_manifest(self.path, head.manifest, changed)
-        return self.log.commit(
-            rel,
-            "append",
-            self._stamp(mf.summary_from_records(records)),
-            expected_parent=head.snapshot_id,
-        )
+        return commit_rewrite(self, head, schema, [], shard_entries, fresh, "append", summary)
 
     # ------------------------------------------------------------- read
     def manifest_entries(self, snapshot_id: int | None = None) -> list[dict]:
@@ -399,13 +397,15 @@ class TokenLakeTable:
         if max_concurrent_units is None:
             max_concurrent_units = max(4, self.spark.sparkContext.defaultParallelism // 2)
         policy = policy or CompactionPolicy()
-        job_id = job_id or f"compact-{uuid.uuid4().hex[:10]}"
-        metrics = JobMetrics(job=job_id)
-        with failure_recorded(self.path, metrics, "compact"):
-            return self._compact_run(
+        return run_recorded(
+            self.path,
+            "compact",
+            job_id,
+            lambda job_id, metrics: self._compact_run(
                 policy, curve, strategy, job_id, max_concurrent_units, metrics, sources,
                 curve_by_source,
-            )
+            ),
+        )
 
     def _compact_run(
         self,
@@ -417,13 +417,14 @@ class TokenLakeTable:
         metrics: JobMetrics,
         sources: list[str] | None = None,
         curve_by_source: dict[str, str] | None = None,
-    ) -> tuple[Snapshot | None, JobMetrics]:
+    ) -> Snapshot | None:
         cb = curve_by_source or {}
 
         def unit_curve(part: str) -> str:
             return cb.get(part, curve)
 
         head = self.log.current()
+        schema = self.schema_def()
         records = mf.read_manifest_list(self.path, head.manifest)
         # Exact shard-level prefilter mirroring plan_compaction's
         # candidate test: a partition can hold a rewrite candidate only
@@ -446,25 +447,23 @@ class TokenLakeTable:
         entries = [e for es in shard_entries.values() for e in es]
         plans = plan_compaction(entries, policy)
         if not plans:
-            return None, metrics.finish()
+            return None
 
         ckpt = JobCheckpoint(self.path, job_id)
         done = ckpt.completed_units()
-        rewritten: set[str] = set()
-        new_files: list[str] = []
+        cand: list[dict] = []  # every planned input: dropped at commit
         pending: list[tuple[str, list[dict]]] = []
         fresh: list[dict] = []  # per-file stats, computed inside units
         stale_stat_units: list[tuple[str, list[str]]] = []  # resumed pre-stats checkpoints
         for part, groups in plans.items():
             inputs = [f for g in groups for f in g.files]
-            rewritten.update(f["file_path"] for f in inputs)
+            cand.extend(inputs)
             metrics.files_in += len(inputs)
             metrics.bytes_in += sum(f["file_bytes"] for f in inputs)
             metrics.rows += sum(f["row_count"] for f in inputs)
             metrics.tokens += sum(f["token_count"] for f in inputs)
             metrics.partitions += 1
             if part in done:
-                new_files.extend(done[part]["output_files"])
                 if done[part].get("output_stats") is not None:
                     fresh.extend(done[part]["output_stats"])
                 else:
@@ -472,7 +471,7 @@ class TokenLakeTable:
             else:
                 pending.append((part, inputs))
 
-        read_ddl = self.schema_def().ddl(extra=((mf.ZKEY_COL, "long"),))
+        read_ddl = schema.ddl(extra=((mf.ZKEY_COL, "long"),))
         unit_bounds: dict[str, list[int]] = {}
         if strategy == "sort" and pending:
             unit_bounds = plan_unit_bounds(
@@ -487,7 +486,7 @@ class TokenLakeTable:
                 curve_by_source=cb,
             )
 
-        def _run_unit(part: str, inputs: list[dict]) -> tuple[list[str], list[dict]]:
+        def _run_unit(part: str, inputs: list[dict]) -> list[dict]:
             in_paths = [f["file_path"] for f in inputs]
             t0 = time.time()
             ckpt.intent(part, in_paths)
@@ -518,7 +517,7 @@ class TokenLakeTable:
                 duration_s=time.time() - t0,
                 output_stats=stats,
             )
-            return out, stats
+            return stats
 
         if pending:
             from concurrent.futures import ThreadPoolExecutor
@@ -555,8 +554,7 @@ class TokenLakeTable:
             self.spark.conf.set(aqe_key, "false")
             try:
                 with ThreadPoolExecutor(max_workers=workers) as pool:
-                    for out, stats in pool.map(lambda pu: _run_unit(*pu), pending):
-                        new_files.extend(out)
+                    for stats in pool.map(lambda pu: _run_unit(*pu), pending):
                         fresh.extend(stats)
             finally:
                 self.spark.conf.set(conf_key, prev)
@@ -570,36 +568,23 @@ class TokenLakeTable:
                 fresh.extend(mf.compute_file_stats(self.spark, self.path, files, curve=c))
         metrics.files_out = len(fresh)
         metrics.bytes_out = sum(e["file_bytes"] for e in fresh)
-        fresh_by_part: dict[str, list[dict]] = {}
-        for e in fresh:
-            fresh_by_part.setdefault(e["partition"], []).append(e)
         # only PLANNED partitions get a new shard (kept files + fresh
         # outputs); every other shard is carried by reference
-        changed = {
-            part: [e for e in shard_entries[part] if e["file_path"] not in rewritten]
-            + fresh_by_part.get(part, [])
-            for part in plans
-        }
-        rel, new_records = mf.update_manifest(self.path, head.manifest, changed)
-        snap = self.log.commit(
-            rel,
+        return commit_rewrite(
+            self,
+            head,
+            schema,
+            cand,
+            shard_entries,
+            fresh,
             "compact",
-            self._stamp(
-                {
-                    **mf.summary_from_records(new_records),
-                    "job_id": job_id,
-                    "curve": curve,
-                    **({"curve_by_source": cb} if cb else {}),
-                    "strategy": strategy,
-                }
-            ),
-            expected_parent=head.snapshot_id,
+            {
+                "job_id": job_id,
+                "curve": curve,
+                **({"curve_by_source": cb} if cb else {}),
+                "strategy": strategy,
+            },
         )
-        metrics.finish()
-        from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-        record_job_metrics(self.path, metrics, "compact", snapshot_id=snap.snapshot_id)
-        return snap, metrics
 
     # ------------------------------------------- maintenance: row delete
     def delete_where(
@@ -705,7 +690,11 @@ class TokenLakeTable:
         return self.log.commit(
             target.manifest,
             "rollback",
-            self._stamp({**summary, "restored_snapshot_id": snapshot_id}),
+            {
+                **summary,
+                "restored_snapshot_id": snapshot_id,
+                "schema_version": self.schema_def().version,
+            },
             expected_parent=head.snapshot_id if head else None,
         )
 
@@ -733,11 +722,43 @@ class TokenLakeTable:
         )
 
 
-def _summary(entries: list[dict]) -> dict:
-    return {
-        "files": len(entries),
-        "rows": int(sum(e["row_count"] for e in entries)),
-        "tokens": int(sum(e["token_count"] for e in entries)),
-        "bytes": int(sum(e["file_bytes"] for e in entries)),
-        "partitions": len({e["partition"] for e in entries}),
+def commit_rewrite(
+    table: TokenLakeTable,
+    head: Snapshot | None,
+    schema: TableSchema,
+    cand: list[dict],
+    shard_entries: dict[str, list[dict]],
+    fresh: list[dict],
+    operation: str,
+    summary: dict,
+) -> Snapshot:
+    """The one manifest + snapshot commit behind every data write
+    (create, append, WAP publish, compact, merge, delete, update): drop
+    the rewritten files ``cand``, add the ``fresh`` ones, write new
+    shards ONLY for the partitions either touches (every other shard is
+    carried by reference), and commit with optimistic concurrency
+    against ``head`` (None: the table's first commit).
+
+    ``shard_entries`` maps each touched partition to its entries in
+    ``head``. ``schema`` is the schema the caller planned against and is
+    what the snapshot stamps: re-reading it here could stamp a version a
+    concurrent ``evolve_schema`` has written but not (yet) committed."""
+    dropped = {e["file_path"] for e in cand}
+    fresh_by_part: dict[str, list[dict]] = {}
+    for e in fresh:
+        fresh_by_part.setdefault(e["partition"], []).append(e)
+    changed_parts = {e["partition"] for e in cand} | set(fresh_by_part)
+    changed = {
+        part: [e for e in shard_entries.get(part, []) if e["file_path"] not in dropped]
+        + fresh_by_part.get(part, [])
+        for part in changed_parts
     }
+    rel, new_records = mf.update_manifest(table.path, head.manifest if head else None, changed)
+    # full post-state aggregates (files/rows/tokens/bytes/partitions) on
+    # every commit kind — history() and trend tooling read them; the
+    # caller's op-specific keys layer on top
+    summary = {**mf.summary_from_records(new_records), **summary}
+    summary["schema_version"] = schema.version
+    return table.log.commit(
+        rel, operation, summary, expected_parent=head.snapshot_id if head else None
+    )

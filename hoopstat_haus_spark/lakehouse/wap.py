@@ -169,12 +169,10 @@ def publish_staged(table: "TokenLakeTable", ref: str, max_retries: int = 5) -> S
             if snap.summary.get("wap_ref") == ref:
                 return _finish_published(table, ref, snap)
         raise
-    by_part: dict[str, list[dict]] = {}
-    for e in rec["entries"]:
-        by_part.setdefault(e["partition"], []).append(e)
     last_err: ConcurrentCommitError | None = None
     for _ in range(max_retries):
         head = table.log.current()
+        schema = table.schema_def()
         # re-check ANY snapshot committed since the last scan — including
         # on the first attempt (a same-ref publish can land between the
         # initial full scan and this head read)
@@ -183,17 +181,9 @@ def publish_staged(table: "TokenLakeTable", ref: str, max_retries: int = 5) -> S
             checked = max(checked, sid)
             if snap.summary.get("wap_ref") == ref:
                 return _finish_published(table, ref, snap)
-        base = {r["partition"]: r for r in mf.read_manifest_list(table.path, head.manifest)}
-        changed = {
-            part: (mf.read_shard(table.path, base[part]) if part in base else []) + entries
-            for part, entries in by_part.items()
-        }
-        rel, records = mf.update_manifest(table.path, head.manifest, changed)
-        summary = table._stamp(mf.summary_from_records(records))
-        summary.update({"wap_ref": ref, "staged_ms": rec["created_ms"]})
         try:
-            snap = table.log.commit(
-                rel, "append", summary, expected_parent=head.snapshot_id
+            snap = table._commit_append(
+                head, schema, rec["entries"], {"wap_ref": ref, "staged_ms": rec["created_ms"]}
             )
         except ConcurrentCommitError as exc:
             last_err = exc  # head moved: re-plan against the new head

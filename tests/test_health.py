@@ -33,17 +33,28 @@ def test_jobs_record_metrics_and_report_operational(spark, tmp_table_dir):
         .select("doc_id", F.expr("transform(tokens, x -> cast(x + 1 as int))").alias("tokens"), "n_tok", "source")
     )
     merge_into(t, upd)
+    cut = "cast(substr(doc_id, 5) as long)"
+    t.delete_where(f"{cut} < 50")
+    t.update_where(f"{cut} between 100 and 150", {"tokens": "slice(tokens, 1, 3)"})
+    # a delete matching nothing commits nothing and records nothing
+    n_recs = len(read_job_records(t.path))
+    assert t.delete_where("doc_id = 'no-such-doc'")[0] is None
+    assert len(read_job_records(t.path)) == n_recs
 
     recs = read_job_records(t.path)
-    assert {r["operation"] for r in recs} == {"compact", "merge"}
+    ops = ["compact", "merge", "delete", "update"]
+    assert [r["operation"] for r in recs] == ops  # one record per op, in order
     assert all(r["status"] == "success" for r in recs)
-    assert all(r["snapshot_id"] is not None for r in recs)
+    # each record names the snapshot its op committed
+    by_op = {s.operation: s.snapshot_id for s in map(t.log.get, t.log.list_ids())}
+    assert [r["snapshot_id"] for r in recs] == [by_op[op] for op in ops]
 
     report = health_report(t.path)
     assert report["overall_status"] == OPERATIONAL
-    assert report["stages"]["compact"]["status"] == OPERATIONAL
+    for op in ops:
+        assert report["stages"][op]["status"] == OPERATIONAL
+        assert report["stages"][op]["runs"] == 1
     assert report["stages"]["compact"]["total_gb_in"] > 0
-    assert report["stages"]["merge"]["runs"] == 1
 
 
 def test_failed_head_degrades_and_no_success_is_outage(spark, tmp_table_dir):

@@ -2,9 +2,12 @@
 partitions) — DataFrames over the snapshot log and manifests, verified
 against the ground truth the engine itself maintains."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import CompactionPolicy, TokenLakeTable
+from hoopstat_haus_spark.lakehouse.merge import merge_into
+from hoopstat_haus_spark.lakehouse.wap import publish_staged, stage_append
 from hoopstat_haus_spark.tables import synthetic
 
 POL = CompactionPolicy(min_file_bytes=1 << 20, target_file_bytes=4 << 20, max_file_bytes=8 << 20)
@@ -72,18 +75,57 @@ def test_metadata_tables(spark, tmp_table_dir):
     assert t2.partitions().count() == 0
 
 
-def test_history_merge_snapshot_carries_full_aggregates(spark, tmp_table_dir):
-    """Merge commits stamp the same files/rows/tokens/bytes aggregates as
-    append/compact — history() must not report files=0 on them."""
-    from hoopstat_haus_spark.lakehouse.merge import merge_into
+def _cut(n: int) -> str:
+    return f"cast(substr(doc_id, 5) as long) < {n}"
 
+
+def _publish(t, spark):
+    stage_append(t, synthetic(spark, 1300).filter(f"not {_cut(1200)}"), ref="r1")
+    publish_staged(t, "r1")
+
+
+# op → (what it does to a 1200-doc table, the operation it commits)
+_OPS = {
+    "create": (lambda t, spark: None, "append"),
+    "append": (
+        lambda t, spark: t.append(synthetic(spark, 1300).filter(f"not {_cut(1200)}")),
+        "append",
+    ),
+    "compact": (lambda t, spark: t.compact(POL), "compact"),
+    "merge": (
+        lambda t, spark: merge_into(t, synthetic(spark, 1300).filter(f"not {_cut(1150)}")),
+        "merge",
+    ),
+    "delete": (lambda t, spark: t.delete_where(_cut(100)), "delete"),
+    "update": (
+        lambda t, spark: t.update_where(_cut(100), {"tokens": "slice(tokens, 1, 2)"}),
+        "update",
+    ),
+    "publish": (_publish, "append"),
+}
+
+
+@pytest.mark.parametrize("op", list(_OPS))
+def test_history_merge_snapshot_carries_full_aggregates(spark, tmp_table_dir, op):
+    """Every commit kind stamps the full files/rows/tokens/bytes/
+    partitions aggregates of the table it leaves, plus its schema
+    version — history() must not report files=0 on any of them (merge
+    commits once did)."""
     t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 1200), repartition_n=2)
-    feed = synthetic(spark, 1300).filter("cast(substr(doc_id, 5) as long) >= 1150")
-    merge_into(t, feed)
+    run, operation = _OPS[op]
+    run(t, spark)
 
-    row = [r for r in t.history().collect() if r["operation"] == "merge"][-1]
-    assert row["rows"] == 1300 and row["files"] > 0
-    summ = t.log.current().summary
-    assert summ["files"] == len(t.manifest_entries())
-    assert summ["tokens"] == sum(e["token_count"] for e in t.manifest_entries())
-    assert summ["bytes"] > 0 and summ["partitions"] > 0
+    snap = t.log.current()
+    assert snap.operation == operation
+    entries = t.manifest_entries()
+    summ = snap.summary
+    assert summ["files"] == len(entries) > 0
+    assert summ["rows"] == sum(e["row_count"] for e in entries)
+    assert summ["tokens"] == sum(e["token_count"] for e in entries)
+    assert summ["bytes"] == sum(e["file_bytes"] for e in entries)
+    assert summ["partitions"] == len({e["partition"] for e in entries})
+    assert summ["schema_version"] == 1
+    row = [r for r in t.history().collect() if r["is_current"]][0]
+    assert (row["rows"], row["files"]) == (summ["rows"], summ["files"])
+    if op == "merge":
+        assert row["rows"] == 1300

@@ -2,6 +2,8 @@
 mixed-schema compaction and MERGE (reference ``SchemaEvolution``,
 libs/hoopstat-data/hoopstat_data/silver_models.py:353)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -134,3 +136,43 @@ def test_lost_commit_race_rolls_back_schema_file(spark, tmp_table_dir):
     t.evolve_schema([LANG])  # retry succeeds (no 'already exists')
     assert t.schema_def().version == v_before + 1
     assert t.log.current().summary["schema_version"] == v_before + 1
+
+
+@pytest.mark.parametrize("op", ["append", "compact", "publish"])
+def test_commit_stamps_planning_schema(spark, tmp_table_dir, monkeypatch, op):
+    """A commit stamps the schema its op planned against, never a version
+    a concurrent ``evolve_schema`` has written but not committed. The
+    evolve's window (schema-v2 on disk, no snapshot yet) is opened by a
+    hook in the manifest update every commit runs; once the op has
+    committed, the evolve loses the race and removes its file, as
+    ``evolve_schema`` does — a snapshot stamped v2 would then be
+    unreadable."""
+    from hoopstat_haus_spark.lakehouse import manifest as mf
+    from hoopstat_haus_spark.lakehouse.schema import evolved, write_schema
+    from hoopstat_haus_spark.lakehouse.wap import publish_staged, stage_append
+
+    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 2000), repartition_n=4)
+    batch = synthetic(spark, 2300).filter("cast(substr(doc_id, 5) as long) >= 2000")
+    if op == "publish":
+        stage_append(t, batch, ref="r1")
+    orphans = []
+    real_update = mf.update_manifest
+
+    def racing_update(*args, **kwargs):
+        orphans.append(write_schema(t.path, evolved(t.schema_def(), [LANG])))
+        return real_update(*args, **kwargs)
+
+    monkeypatch.setattr(mf, "update_manifest", racing_update)
+    if op == "append":
+        snap = t.append(batch, repartition_n=2)
+    elif op == "compact":
+        snap, _metrics = t.compact(POLICY)
+    else:
+        snap = publish_staged(t, "r1")
+    monkeypatch.setattr(mf, "update_manifest", real_update)
+    assert len(orphans) == 1
+    os.remove(orphans[0])  # the evolve lost the commit race
+
+    assert snap.summary["schema_version"] == 1
+    assert t.schema_def(snap.snapshot_id).version == 1
+    assert t.scan(snapshot_id=snap.snapshot_id).count() == (2000 if op == "compact" else 2300)
